@@ -25,7 +25,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
 object ApproxDistinctRewrite extends Rule[LogicalPlan] {
 
   private def enabled: Boolean =
-    conf.getConfString("spark.graft.approxDistinct", "false").toBoolean
+    graft.core.GraftConf.boolean(conf, "spark.graft.approxDistinct", false)
 
   override def apply(plan: LogicalPlan): LogicalPlan =
     if (!enabled) plan

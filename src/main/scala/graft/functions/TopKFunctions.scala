@@ -226,7 +226,7 @@ object TopKFunctions {
     * width graft_top_k achieves, with zero joined rows).
     *
     * Exactness contract (spec-pinned ≡ the join formulation): scoring
-    * replays `Similarity.splitScore` bit-for-bit — per-side norms with
+    * replays `Similarity.splitCosine` bit-for-bit — per-side norms with
     * the kernel's accumulation order, dot in pair order, the zero-
     * denominator guard, and Catalyst `round(_, 6)`'s exact
     * BigDecimal(HALF_UP) rounding BEFORE ranking (ties rank on the

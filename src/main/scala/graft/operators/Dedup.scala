@@ -18,9 +18,8 @@ import org.apache.spark.sql.graftbridge.SparkBridge
   *   is bounded by bucket size, never O(n²) global.
   * - SimHash: one 32-bit sketch per doc; candidate pairs from
   *   high-byte blocking + popcount(xor) ≤ r — integer ops end to end.
-  * - Embedding near-dup: block first (here: id-range probes or LSH in
-  *   graft.operators.Similarity), cosine kernel is the codegen'd
-  *   graft_cosine expression.
+  * - Embedding near-dup: the ANN pipeline of graft.operators.Similarity
+  *   with threshold-pair output; the probe predicate blocks.
   *
   * All hash math is md5-derived so the DuckDB oracle can replay it
   * bit-for-bit (no engine-specific hash functions on the result path).
@@ -1154,30 +1153,9 @@ object Dedup {
           i => text.substr(i, lit(n)))))
 
   /** Embedding cosine near-duplicate pairs above `threshold` between
-    * a probe subset and the corpus. The probe predicate is the
-    * blocking strategy (callers at scale pass an LSH bucket join
-    * instead — see Similarity.lshTopK).
-    *
-    * The single-frame convenience over [[embeddingNearDupFrames]]
-    * (all regimes there): one embedded graft_probe_matches kernel
-    * under the 2¹⁶ gate, chunked kernels up to the collect caps
-    * (disjoint probe chunks × corpus scans — probes partition, so the
-    * union IS the single-kernel answer), role swap past the caps when
-    * the corpus fits them, and past BOTH a fail-fast (the non-equi
-    * join plans as CartesianProduct once the probe side outgrows
-    * broadcast — the shape the r14 sf10 measurement showed dies on
-    * disk spill; [[Similarity.AnnForceJoinKey]] opts in anyway). From
-    * THIS entry point the role swap never fires (probes ⊆ corpus: a
-    * probe set too big to collect implies a corpus too big to
-    * collect).
-    *
-    * Driver memory bound: the collected probe matrix is capped by
-    * BOTH `maxChunkedProbes` rows and the `maxCollectBytes` byte
-    * budget (~`rows × dims × 8` bytes, dims sniffed from the gate
-    * prefix — Similarity.decideRegime). When nChunks > 1 each chunk
-    * re-runs `emb`'s full lineage: persist a DERIVED emb (anything
-    * that isn't a plain parquet scan) before calling, or the upstream
-    * compute repeats per chunk.
+    * a probe subset of `emb` and all of `emb`: the single-frame form of
+    * [[embeddingNearDupFrames]]. The probe predicate is the blocking
+    * strategy. Probes ⊆ corpus, so the role swap never fires from here.
     */
   def embeddingNearDup(
       emb: DataFrame,
@@ -1195,36 +1173,20 @@ object Dedup {
       maxCollectBytes, dims = dims)
 
   /** [[embeddingNearDup]] with probes and corpus as SEPARATE frames
-    * (cross-corpus near-dup: decontamination-style "which corpus docs
-    * sit near these probes").
+    * (decontamination-style "which corpus docs sit near these probes"),
+    * through the ANN pipeline of the Similarity object scaladoc with the
+    * all-pairs source: probe kernels, role swap, and the fail-fast
+    * non-equi join.
     *
     * Pair contract, default (`allPairs = false`): output
     * (probe_id, cand_id) with `probe_id < cand_id` and raw cosine
-    * strictly above `threshold` — identical to the single-frame form,
-    * for callers whose probes are a SUBSET of the corpus (the id
-    * ordering dedups the symmetric pair). With `allPairs = true` —
-    * the mode for genuinely DISTINCT frames — every matching
-    * (probe_id, cand_id) is emitted with no id-ordering or self-pair
-    * filter: unrelated id spaces make `probe_id < cand_id` silently
-    * discard ~half the true matches and a numeric collision is not a
-    * self-pair. Output ids are BIGINT in every regime regardless of
-    * input id type (the regime must not leak into the schema).
-    *
-    * Same regime structure as Similarity.bruteForceTopKFrames (its
-    * scaladoc carries the full argument; the decision protocol and
-    * the row+byte collect budgets live in Similarity.decideRegime):
-    * probe-embedded/chunked kernels up to the collect caps; past them
-    * the ROLE SWAP embeds the corpus instead when IT fits —
-    * ⌈corpus/gate⌉ reversed `graft_probe_matches` projection chunks
-    * over one probe scan each (`emitGreater`: the row is the probe,
-    * emitted ids are candidates above it — the identical pair
-    * contract from the other side), and because chunks are disjoint
-    * in candidate space their UNION is the answer outright, with no
-    * merge aggregate at all. When BOTH sides exceed the caps the
-    * engine FAILS FAST (the non-equi join was measured dead at scale,
-    * BENCHNOTES_r14) unless the session opts in via
-    * [[Similarity.AnnForceJoinKey]]; `maxEmbeddedProbes = 0` is the
-    * spec seam that runs the join silently.
+    * strictly above `threshold` — for probes that are a SUBSET of the
+    * corpus (the id ordering dedups the symmetric pair). With
+    * `allPairs = true` — the mode for genuinely DISTINCT frames — every
+    * matching (probe_id, cand_id) is emitted with no id-ordering or
+    * self-pair filter: unrelated id spaces make `probe_id < cand_id`
+    * silently discard ~half the true matches and a numeric collision is
+    * not a self-pair. Output ids are BIGINT in every regime.
     */
   def embeddingNearDupFrames(
       probes: DataFrame,
@@ -1238,105 +1200,9 @@ object Dedup {
       maxChunkedProbes: Int = 1 << 20,
       maxCollectBytes: Long = 512L << 20,
       allPairs: Boolean = false,
-      dims: Option[Int] = None): DataFrame = {
-    val spark = corpus.sparkSession
-    import graft.functions.VectorFunctions
-    val gate = math.max(maxEmbeddedProbes, 0)
-    import org.apache.spark.sql.graftbridge.SparkBridge
-    val dec = Similarity.decideRegime(probes, probeIdCol, probeVecCol,
-      Some((corpus, corpusIdCol, corpusVecCol)),
-      gate, maxChunkedProbes, maxCollectBytes, knownDims = dims)
-    dec.regime match {
-      case Similarity.AnnRegime.Probes(collected) =>
-        // EMBEDDED/CHUNKED: per corpus row the graft_probe_matches
-        // kernel emits matching probe ids directly, with no joined-row
-        // materialization; scoring is bit-identical to the join form
-        // (split norms, dot per pair, zero guard). Null id or vector:
-        // dropped (the join regime's null-condition semantics), never
-        // an NPE on getLong.
-        val usable = collected.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
-        val all = rebalance(
-          corpus.select(col(corpusIdCol).as("cand_id"), col(corpusVecCol).as("cand_vec")),
-          Seq(col("cand_id")))
-        val chunk = math.max(dec.chunkRows, 1)
-        val nChunks = math.max(1, math.ceil(usable.length.toDouble / chunk).toInt)
-        val frames = (0 until nChunks).map { c =>
-          val lo = (c.toLong * usable.length / nChunks).toInt
-          val hi = ((c + 1).toLong * usable.length / nChunks).toInt
-          val slice = usable.slice(lo, hi)
-          val pIds = slice.map(_.getLong(0))
-          val pVecs = slice.map(_.getSeq[Double](1).toArray)
-          val matches = SparkBridge.column(graft.functions.TopKFunctions.ProbeMatches(
-            SparkBridge.expression(all("cand_id")),
-            SparkBridge.expression(all("cand_vec")),
-            pIds, pVecs, threshold, emitAll = allPairs))
-          all.select(col("cand_id"), explode(matches).as("probe_id"))
-        }
-        frames.reduce(_.union(_))
-          .select(col("probe_id"), col("cand_id").cast("long").as("cand_id"))
-      case Similarity.AnnRegime.Corpus(candCollected) =>
-        // ROLE SWAP: embed the corpus (reversed kernel over the probe
-        // scan; disjoint candidate chunks union directly — no merge)
-        val usable = candCollected.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
-        val probeFrame = rebalance(
-          probes.select(col(probeIdCol).as("probe_id"), col(probeVecCol).as("probe_vec")),
-          Seq(col("probe_id")))
-        val chunk = math.max(dec.chunkRows, 1)
-        val nChunks = math.max(1, math.ceil(usable.length.toDouble / chunk).toInt)
-        (0 until nChunks).map { c =>
-          val lo = (c.toLong * usable.length / nChunks).toInt
-          val hi = ((c + 1).toLong * usable.length / nChunks).toInt
-          val slice = usable.slice(lo, hi)
-          val cIds = slice.map(_.getLong(0))
-          val cVecs = slice.map(_.getSeq[Double](1).toArray)
-          // kernel DIRECTLY inside the generator (never an aliased
-          // array: InferFiltersFromGenerate would duplicate it — the
-          // bruteForceTopKFrames role-swap audit caught exactly that)
-          val matches = SparkBridge.column(graft.functions.TopKFunctions.ProbeMatches(
-            SparkBridge.expression(probeFrame("probe_id")),
-            SparkBridge.expression(probeFrame("probe_vec")),
-            cIds, cVecs, threshold, emitGreater = true, emitAll = allPairs))
-          probeFrame.select(col("probe_id"), explode(matches).as("cand_id"))
-        }.reduce(_.union(_))
-          .select(col("probe_id").cast("long").as("probe_id"), col("cand_id"))
-      case Similarity.AnnRegime.BothOver =>
-        if (gate > 0) Similarity.enforceJoinContract(spark, "embeddingNearDup",
-          dec.effectiveCap)
-        // norms once per SIDE row, dot alone per pair: bit-identical to
-        // the cosine kernel (same accumulation, same sqrt-product
-        // denominator — Similarity.splitScore scaladoc) at a third of
-        // the per-pair work
-        val probeSide = probes
-          .select(col(probeIdCol).as("probe_id"), col(probeVecCol).as("probe_vec"))
-          .withColumn("probe_norm", VectorFunctions.norm2(spark, col("probe_vec")))
-        // the corpus side streams past the broadcast probes; rebalance
-        // so a single-row-group embedding file doesn't serialize the
-        // |probes|×|corpus| cosine loop on one core (no-op at
-        // multi-split scale — see rebalance)
-        val all = rebalance(
-          corpus.select(col(corpusIdCol).as("cand_id"), col(corpusVecCol).as("cand_vec")),
-          Seq(col("cand_id")))
-          .withColumn("cand_norm", VectorFunctions.norm2(spark, col("cand_vec")))
-        val denom = col("probe_norm") * col("cand_norm")
-        val cos = when(denom === 0.0, 0.0).otherwise(
-          VectorFunctions.dot(spark, col("probe_vec"), col("cand_vec")) / denom)
-        // no broadcast hint above the embedded gate: the probe count is
-        // known only to exceed the cap and can grow ∝ corpus — a forced
-        // broadcast is a driver-OOM at 100×; the planner sizes the build
-        // side from its stats (Similarity.bruteForceTopK's join regime)
-        val joined =
-          if (allPairs)
-            // the kernels drop null-id rows; the crossJoin has no join
-            // condition to drop them implicitly (the `<` below does),
-            // so filter explicitly or the join regime alone would emit
-            // NULL-id pairs
-            all.where(col("cand_id").isNotNull)
-              .crossJoin(probeSide.where(col("probe_id").isNotNull))
-          else all.join(probeSide, col("probe_id") < col("cand_id"))
-        joined
-          .where(cos > threshold)
-          .select(col("probe_id").cast("long").as("probe_id"),
-            col("cand_id").cast("long").as("cand_id"))
-    }
-  }
+      dims: Option[Int] = None): DataFrame =
+    Similarity.annSearch(Similarity.CandidateSource.AllPairs,
+      Similarity.AnnOutput.Pairs(threshold, allPairs),
+      probes, probeIdCol, probeVecCol, corpus, corpusIdCol, corpusVecCol,
+      maxEmbeddedProbes, maxChunkedProbes, maxCollectBytes, dims)
 }

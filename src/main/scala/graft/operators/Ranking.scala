@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, FloatType, LongType, StructField, StructType}
 
 /** Distributed global ranking without the single-partition window.
   *
@@ -56,12 +56,15 @@ object Ranking {
     * `idCol` are non-null and non-NaN — the heap's tie rule IS the
     * window's (value desc, id asc), pinned by RankingSpec. The ONE
     * deliberate deviation (graft_top_k's contract): null/NaN-valued
-    * rows never rank, where the window would rank them last/first.
+    * rows never rank, where the window would rank them last/first — so
+    * a group whose order values are ALL null/NaN is missing from the
+    * output entirely, where the window form would still rank its rows.
     *
     * Output: (groupCols…, rkCol BIGINT 1..k, idCol BIGINT, orderCol
     * DOUBLE) — the heap carries (double, long) pairs, so the order
-    * value must be float/double and the id integral; both pass
-    * through the heap bit-unchanged.
+    * value must be float/double (a decimal or integral `orderCol` is
+    * rejected up front: cast it, accepting double's rounding) and the
+    * id integral; both pass through the heap bit-unchanged.
     */
   def topKPerGroup(
       df: DataFrame,
@@ -72,6 +75,10 @@ object Ranking {
       rkCol: String = "rk"): DataFrame = {
     import org.apache.spark.sql.functions._
     require(groupCols.nonEmpty, "at least one group column")
+    val orderType = df.select(col(orderCol)).schema.head.dataType
+    if (orderType != DoubleType && orderType != FloatType)
+      throw new graft.core.UserException(s"topKPerGroup: orderCol $orderCol must be " +
+        s"float or double, got ${orderType.catalogString}; cast it to double first")
     val spark = df.sparkSession
     df.groupBy(groupCols.map(col): _*)
       .agg(graft.functions.TopKFunctions.topK(

@@ -255,8 +255,8 @@ object Sampling {
       df: DataFrame, quota: DataFrame, stratumCols: Seq[String],
       keyCol: String): DataFrame = {
     val spark = df.sparkSession
-    val maxRows = spark.conf.getOption(QuotaBroadcastRowsKey)
-      .map(_.toInt).getOrElse(QuotaBroadcastRowsDefault)
+    val maxRows = graft.core.GraftConf.int(
+      spark.sessionState.conf, QuotaBroadcastRowsKey, QuotaBroadcastRowsDefault)
     // rename the quota side: it is DERIVED from df, and a self-join
     // on same-named columns trips Spark's ambiguous-attribute lint
     val qNames = stratumCols.indices.map(i => s"__q_s$i") :+ "__q_key"

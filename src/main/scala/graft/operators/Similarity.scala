@@ -1,89 +1,116 @@
 package graft.operators
 
-import graft.functions.VectorFunctions
+import graft.core.{GraftConf, UserException}
+import graft.functions.{TopKFunctions, VectorFunctions}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.SparkBridge
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 
-/** Approximate-nearest-neighbor search over an embedding column
-  * (SURVEY.md §7.5).
+/** Approximate-nearest-neighbor top-k and embedding near-duplicate
+  * pairs over an embedding column (SURVEY.md §7.5).
   *
-  * Two plans, same contract:
-  * - `bruteForceTopK`: probes × corpus with the codegen'd
-  *   `graft_cosine` kernel. The probe side is broadcast (it's small by
-  *   construction), so the corpus scan never shuffles — each executor
-  *   streams its corpus partition past the in-memory probe set. This
-  *   is the exact baseline and stays viable surprisingly far: 1k
-  *   probes × 100M vectors/executor-wave is a pure compute problem.
-  * - `lshTopK`: random-hyperplane LSH — vectors hash to a signature of
-  *   sign-bits against `planes` deterministic hyperplanes; candidates
-  *   are corpus rows sharing a probe's bucket, then exact-rank within
-  *   candidates. Recall < 1 by design; the bucket join replaces the
-  *   full cross product, which is the 100 TB path.
+  * The eight entry points — `{bruteForce,ivf,lsh}TopK{,Frames}` here
+  * and `Dedup.embeddingNearDup{,Frames}` — run one pipeline
+  * ([[annSearch]]) in three parts:
   *
-  * Hyperplanes are derived from md5 so runs are reproducible without a
-  * seed exchange (and oracle-replayable in principle).
+  *  1. CANDIDATE SOURCE ([[CandidateSource]]) — which (probe,
+  *     candidate) pairs are scored at all: every pair (brute force,
+  *     near-dup), the corpus rows in the probe's random-hyperplane
+  *     signature bucket (LSH), or the corpus rows in the probe's
+  *     `nProbe` nearest inverted lists (IVF). The source supplies the
+  *     restriction index the embedded kernels carry and the bucket key
+  *     the over-cap join equi-joins on.
+  *  2. ONE REGIME DECISION ([[decideRegime]]), by bounded driver work:
+  *     - PROBES (the probe matrix fits the collect caps): the probes
+  *       embed in ⌈probes/gate⌉ balanced, disjoint chunk kernels —
+  *       `graft_probe_topk` aggregates or `graft_probe_matches`
+  *       projections, each over one corpus scan with zero joined rows
+  *       (the join formulation paid ~1.9 µs/pair of row plumbing around
+  *       a ~30 ns dot at sf10). Probes partition across chunks, so the
+  *       union IS the single-kernel answer; the per-task heap state
+  *       stays gate × k, which is why the gate exists.
+  *     - CORPUS, the role swap (probes over the caps, corpus within
+  *       them; all-pairs sources only, since the LSH and IVF indexes are
+  *       probe-side): the corpus embeds instead, in disjoint candidate
+  *       chunks projected over one probe scan each (`graft_corpus_topk`,
+  *       or `graft_probe_matches` reversed).
+  *     - BOTH OVER: a join. For LSH and IVF it is the bucket equi-join,
+  *       salted when the key space is below the shuffle parallelism
+  *       ([[AnnBucketSaltKey]]) — the scale path. For all pairs it is a
+  *       non-equi join that plans as CartesianProduct above broadcast
+  *       size and was measured dead at sf10 (2¹⁵ probes × 200k corpus
+  *       filled >60 GB of spill, BENCHNOTES_r14), so it fails fast
+  *       unless [[AnnForceJoinKey]] is set. `maxEmbeddedProbes = 0`
+  *       disables every kernel and runs the join silently: the spec seam
+  *       pinning kernel ≡ join.
+  *  3. ONE KERNEL / JOIN PATH PER OUTPUT SHAPE ([[AnnOutput]]): top-k
+  *     rows (probe_id, rank, cand_id, sim) come from the kernels' own
+  *     heaps or merge through the bounded `graft_top_k` aggregate;
+  *     threshold pairs (probe_id, cand_id) come straight from
+  *     `graft_probe_matches` or the join's filter.
+  *
+  * Every regime returns the same rows (spec-pinned) with BIGINT ids.
+  * Scores are round(cosine, 6) from per-side norms ([[splitCosine]]);
+  * ranking ties break on candidate id; null ids and null vectors never
+  * pair. Driver memory is bounded by a row cap (`maxChunkedProbes`)
+  * and a byte budget (`maxCollectBytes`), and `dims` — an embedding
+  * width known statically — skips the one-row width sniff. When a
+  * kernel regime runs several chunks, each chunk re-runs the scanned
+  * frame's lineage: persist a DERIVED frame (anything that is not a
+  * plain parquet scan) before calling. No broadcast is forced above the
+  * gate: a probe side known only to exceed the cap can grow with the
+  * corpus, so the planner sizes the join from its stats.
+  *
+  * Hyperplanes and the default IVF quantizer are deterministic (md5,
+  * first corpus ids), so runs reproduce without a seed exchange and
+  * the oracles replay them.
   */
 object Similarity {
 
   private val log = org.slf4j.LoggerFactory.getLogger("graft.operators.Similarity")
 
-  /** round(cosine, 6) — ranking key. Rounding makes cross-engine
-    * comparison stable; ties break on id.
-    */
-  private def score(df: DataFrame, a: Column, b: Column): Column =
-    round(VectorFunctions.cosine(df.sparkSession, a, b), 6)
-
-  /** The same score from PRE-COMPUTED per-side norms: bit-identical to
-    * `score` (graft_cosine computes `dot/(sqrt(nx)*sqrt(ny))` with the
+  /** Cosine from PRE-COMPUTED per-side norms: bit-identical to the fused
+    * `graft_cosine` (which computes `dot/(sqrt(nx)*sqrt(ny))` with the
     * zero-denominator guard replicated here; graft_norm2 IS sqrt(nx)
     * with the same accumulation order), but the per-PAIR loop is dot
-    * alone — one third of the cosine kernel's arithmetic, with each
-    * row's norm amortized over every pair it joins into. On a probes ×
-    * corpus scorer that is the difference between 3 and 1 passes over
-    * every vector element ever paired.
+    * alone — one third of the fused kernel's arithmetic, with each
+    * row's norm amortized over every pair it joins into.
     *
-    * PRECONDITION — uniform embedding dimension. The fused cosine
-    * kernel accumulates BOTH norms over min(len_a, len_b), while
-    * graft_norm2 (and ProbeTopKAgg's per-side norms) cover each side's
-    * FULL length; the two agree exactly iff every paired vector has
-    * the same dimension, which an embedding column has by
-    * construction. On mixed-dimension rows the split form scores with
-    * full-length norms (the mathematically saner choice) and the
-    * bit-identity claim does not apply.
+    * PRECONDITION — uniform embedding dimension. The fused kernel
+    * accumulates BOTH norms over min(len_a, len_b), while graft_norm2
+    * (and the kernels' per-side norms) cover each side's FULL length;
+    * the two agree exactly iff every paired vector has the same
+    * dimension, which an embedding column has by construction.
     */
-  private def splitScore(
-      spark: org.apache.spark.sql.SparkSession,
-      a: Column, b: Column, normA: Column, normB: Column): Column = {
+  private def splitCosine(
+      spark: SparkSession, a: Column, b: Column, normA: Column, normB: Column): Column = {
     val denom = normA * normB
-    round(when(denom === 0.0, 0.0)
-      .otherwise(VectorFunctions.dot(spark, a, b) / denom), 6)
+    when(denom === 0.0, 0.0).otherwise(VectorFunctions.dot(spark, a, b) / denom)
   }
 
-  /** Per-probe (rank, cand_id, sim) for the k best candidates of a
-    * scored frame, via the mergeable bounded-top-k aggregate
-    * (TopKFunctions scaladoc). The window formulation
-    * (`row_number() OVER (PARTITION BY probe_id ORDER BY sim DESC,
-    * cand_id)`) is semantically identical on non-null scores (the
-    * aggregate DROPS null-scored rows where the window ranks them
-    * last — no null sims arise here: splitScore/graft_cosine are
-    * null only on null inputs, which the joins never pair) but
-    * shuffles EVERY scored row — probes × corpus, the cross product these operators never
-    * materialize elsewhere; the aggregate partial-reduces each map
-    * task to k rows per probe, so the exchange is corpus-size-free.
+  /** (probe_id, rank, cand_id, sim) rows of `df`'s best-first
+    * per-probe `heap` array; probe_id is cast BIGINT because the
+    * embedded kernels emit BIGINT ids and the output schema may not
+    * change when data size tips the regime.
     */
-  private def rankTopK(scored: DataFrame, k: Int): DataFrame = {
-    val spark = scored.sparkSession
-    scored.groupBy("probe_id")
-      .agg(graft.functions.TopKFunctions
-        .topK(spark, col("sim"), col("cand_id"), k).as("tk"))
-      .select(col("probe_id"), posexplode(col("tk")).as(Seq("pos", "e")))
-      // probe_id cast long: the embedded kernels emit BIGINT ids, so
-      // every regime must (the output schema is part of the contract
-      // and may not change when data size tips the regime)
+  private def ranked(df: DataFrame, heap: Column): DataFrame =
+    df.select(col("probe_id"), posexplode(heap).as(Seq("pos", "e")))
       .select(col("probe_id").cast("long").as("probe_id"),
         (col("pos") + 1).cast("long").as("rank"),
         col("e.cand_id").as("cand_id"), col("e.sim").as("sim"))
-  }
+
+  /** Per-probe k best candidates of a scored (probe_id, cand_id, sim)
+    * frame through the mergeable bounded-top-k aggregate (TopKFunctions
+    * scaladoc). The `row_number()` window is the same answer on
+    * non-null scores (the aggregate drops null sims; none arise here,
+    * as null inputs never pair) but shuffles every scored row; the
+    * aggregate partial-reduces each map task to k rows per probe.
+    */
+  private def rankTopK(scored: DataFrame, k: Int): DataFrame =
+    ranked(scored.groupBy("probe_id")
+      .agg(TopKFunctions.topK(scored.sparkSession, col("sim"), col("cand_id"), k).as("tk")),
+      col("tk"))
 
   /** How an over-gate ANN call will execute, decided by BOUNDED
     * driver work (see [[decideRegime]]).
@@ -93,9 +120,9 @@ object Similarity {
     /** the probe side fits the collect cap: embedded (≤ gate rows) or
       * chunked kernels
       */
-    final case class Probes(rows: Array[org.apache.spark.sql.Row]) extends AnnRegime
+    final case class Probes(rows: Array[Row]) extends AnnRegime
     /** probes exceed the cap but the corpus fits: role swap */
-    final case class Corpus(rows: Array[org.apache.spark.sql.Row]) extends AnnRegime
+    final case class Corpus(rows: Array[Row]) extends AnnRegime
     /** both sides exceed the cap (or the kernels are disabled) */
     case object BothOver extends AnnRegime
   }
@@ -107,8 +134,8 @@ object Similarity {
     * the data actually exceeded, which the byte budget may have set
     * well below the row cap the caller passed). `fetched` counts rows
     * driver-transferred (the spec hook for the transfer bound); `dims`
-    * is the sniffed embedding dimension (reused by the LSH join
-    * regime's signature expression instead of a second sizing job).
+    * is the embedding dimension (reused by the LSH join regime's
+    * signature expression instead of a second sizing job).
     */
   private[graft] final case class RegimeDecision(
       regime: AnnRegime,
@@ -126,11 +153,9 @@ object Similarity {
     *     `min(maxEmbeddedProbes, maxCollectBytes / (8·dims))` BEFORE
     *     any matrix moves: the gate prefix itself is rows × dims × 8
     *     bytes of driver transfer, so a dims-blind gate of 2¹⁶ rows
-    *     means ~2.1 GB at 4096-dim embeddings — the r16 shape
-    *     byte-budgeted only the over-gate cap and never the gate
-    *     collect it paid first. The shrunk gate also bounds each
-    *     chunk's embedded literal matrix (gate × dims × 8 bytes of
-    *     plan shipped per executor), since callers chunk by it.
+    *     means ~2.1 GB at 4096-dim embeddings. The shrunk gate also
+    *     bounds each chunk's embedded literal matrix (gate × dims × 8
+    *     bytes of plan shipped per executor), since callers chunk by it.
     *  2. collect `limit(gate + 1)` probe rows — ≤ gate means EMBEDDED
     *     and the prefix IS the matrix.
     *  3. otherwise COUNT the probe side against the effective cap —
@@ -140,17 +165,23 @@ object Similarity {
     *     when it fits → CHUNKED.
     *  4. else count the corpus the same way and collect IT when it
     *     fits → ROLE SWAP. Only the gate prefix is live during this
-    *     collect — the r15 shape held a full cap-sized probe matrix
-    *     while collecting the corpus, transiently doubling the bound.
+    *     collect.
     *  5. both over → [[AnnRegime.BothOver]], having driver-transferred
-    *     O(gate) rows + two counts to find out (the r15 shape paid up
-    *     to TWO full cap-sized collects to discover the fallback).
+    *     O(gate) rows + two counts to find out.
     *
-    * The byte budget sizes BOTH sides with the sniffed probe dims
-    * (uniform embedding dimension is already splitScore's scoring
+    * The byte budget sizes BOTH sides with the probe dims (uniform
+    * embedding dimension is already splitCosine's scoring
     * precondition). A budget below one row's bytes floors at 1 row —
     * the cap then routes over-gate calls to role swap / fail-fast
     * rather than collecting a matrix over budget.
+    *
+    * `knownDims`: a caller whose embedding width is STATICALLY known (a
+    * model's fixed dimension) skips the one-row sniff job. The value
+    * feeds exactly what the sniff fed (the byte-budget row caps), so a
+    * correct hint yields the identical decision with one row less
+    * `fetched`. A wrong hint would size the budget wrongly, so it is
+    * checked, with no extra job, against the first non-empty vector of
+    * the gate prefix, and a mismatch is a [[UserException]].
     */
   private[graft] def decideRegime(
       probes: DataFrame, probeIdCol: String, probeVecCol: String,
@@ -164,26 +195,24 @@ object Similarity {
     if (rawGate == 0) return RegimeDecision(AnnRegime.BothOver, 0L, 0, 0L, None)
     val pSel = probes.select(
       col(probeIdCol).cast("long"), col(probeVecCol).cast("array<double>"))
-    // `knownDims` (r18): a caller whose embedding width is STATICALLY
-    // known (a model's fixed dimension) skips the one-row sniff job —
-    // the only Spark job the decision otherwise adds per call. The
-    // value feeds exactly what the sniff fed (the byte-budget row
-    // caps); regimes are spec-pinned result-equal, so a consistent
-    // width yields the identical decision, and the transfer bound
-    // (`fetched`) only ever shrinks by the skipped row.
-    val dims = knownDims.filter(_ > 0).orElse {
+    val hint = knownDims.filter(_ > 0)
+    val dims = hint.orElse {
       probes
         .select(col(probeVecCol).cast("array<double>").as("__v"))
         .where(col("__v").isNotNull && size(col("__v")) > 0)
         .select(size(col("__v"))).head(1).headOption.map(_.getInt(0))
     }
-    var fetched =
-      if (knownDims.exists(_ > 0)) 0L else dims.size.toLong
+    var fetched = if (hint.isDefined) 0L else dims.size.toLong
     val byteCapRows = dims.map(d => math.max(1L, maxCollectBytes / (8L * d)))
       .getOrElse(Long.MaxValue) // no non-null probe vector: row caps govern
     val gate = math.min(rawGate.toLong, byteCapRows).toInt
     val head = pSel.limit(gate + 1).collect()
     fetched += head.length
+    for (d <- hint; w <- head.iterator.filterNot(_.isNullAt(1))
+        .map(_.getSeq[Double](1).length).find(_ > 0) if w != d)
+      throw new UserException(s"dims = $d does not match the $w-dim vectors " +
+        s"of column $probeVecCol: the hint sizes the collect byte budget, " +
+        s"so pass dims = Some($w) or leave it unset")
     if (head.length <= gate)
       return RegimeDecision(AnnRegime.Probes(head), fetched, gate, gate, dims)
     // byteCapRows ≥ gate by construction of gate, so cap ≥ gate too
@@ -221,15 +250,12 @@ object Similarity {
   /** Both sides over the cap with kernels enabled: the engine does NOT
     * silently submit a plan its own measurements called dead — fail
     * fast with the scale alternatives, unless the caller explicitly
-    * opts into the join via [[AnnForceJoinKey]] (then warn). A gate of
-    * 0 never reaches here (kernels deliberately disabled = the spec
-    * seam; the join runs silently). `cap` is the EFFECTIVE cap the
-    * decision used — when the byte budget governed, that is smaller
-    * than the row cap the caller passed, and the message must name the
-    * bound the data actually exceeded.
+    * opts into the join via [[AnnForceJoinKey]] (then warn). `cap` is
+    * the EFFECTIVE cap the decision used — when the byte budget
+    * governed, that is smaller than the row cap the caller passed, and
+    * the message must name the bound the data actually exceeded.
     */
-  private[graft] def enforceJoinContract(
-      spark: org.apache.spark.sql.SparkSession, op: String, cap: Long): Unit = {
+  private def enforceJoinContract(spark: SparkSession, op: String, cap: Long): Unit = {
     val msg = s"$op: BOTH probe and corpus side exceed the collect cap " +
       s"(maxChunkedProbes/maxCollectBytes, effective $cap rows) — the " +
       "exact non-equi join plans as CartesianProduct above broadcast " +
@@ -237,28 +263,27 @@ object Similarity {
       "Use lshTopKFrames/ivfTopKFrames (bucket equi-joins) at this " +
       s"scale, raise the caps, or set $AnnForceJoinKey=true to submit " +
       "the join anyway."
-    if (spark.conf.getOption(AnnForceJoinKey).exists(_.toBoolean)) log.warn(msg)
-    else throw new graft.core.UserException(msg)
+    if (GraftConf.boolean(spark.sessionState.conf, AnnForceJoinKey, false)) log.warn(msg)
+    else throw new UserException(msg)
   }
 
   /** Session conf: probe-side replication factor for the over-cap
     * bucket equi-joins (LSH signature / IVF inverted list). The bucket
-    * key space is SMALL by construction — 2^planes signatures,
-    * nCentroids lists — so the join's shuffle parallelism is
-    * key-capped and a dense region makes a hub bucket one task owns.
-    * Salting splits every bucket S ways: candidates take a
-    * deterministic salt from their id hash, probes replicate across
-    * all S salts — each (probe, candidate) pair still meets in exactly
-    * one salt, so results are IDENTICAL (the regime-equivalence specs
-    * and the q81 oracle run salted). 0 (the default) = auto:
-    * ceil(shuffle partitions / key count) — just enough to restore
-    * full shuffle parallelism, a no-op when keys already exceed
-    * partitions.
+    * key space is SMALL by construction — 2^planes signatures, one key
+    * per centroid — so the join's shuffle parallelism is key-capped and
+    * a dense region makes a hub bucket one task owns. Salting splits
+    * every bucket S ways: candidates take a deterministic salt from
+    * their id hash, probes replicate across all S salts — each (probe,
+    * candidate) pair still meets in exactly one salt, so results are
+    * IDENTICAL (the regime-equivalence specs and the q81 oracle run
+    * salted). 0 (the default) = auto: ceil(shuffle partitions / key
+    * count) — just enough to restore full shuffle parallelism, a no-op
+    * when keys already exceed partitions.
     */
   val AnnBucketSaltKey = "spark.graft.ann.bucketSalt"
 
   private def bucketSalt(spark: SparkSession, nKeys: Long): Int = {
-    val conf = spark.conf.getOption(AnnBucketSaltKey).map(_.toInt).getOrElse(0)
+    val conf = GraftConf.int(spark.sessionState.conf, AnnBucketSaltKey, 0)
     if (conf > 0) conf
     else {
       val parts = spark.sessionState.conf.numShufflePartitions.toLong
@@ -282,214 +307,6 @@ object Similarity {
         explode(typedlit((0L until salt.toLong).toSeq)))
       salted.join(replicated, Seq(bucketCol, "__salt")).drop("__salt")
     }
-
-  /** Exact brute-force top-k of a probe SUBSET of `emb` against all
-    * of `emb` — the single-frame convenience over
-    * [[bruteForceTopKFrames]] (all regimes and contracts documented
-    * there). Because the probes are a subset of the corpus here, the
-    * role-swap regime never fires from this entry point (a probe set
-    * too big to collect implies a corpus too big to collect); callers
-    * with a separate query set use the frames form directly.
-    */
-  def bruteForceTopK(
-      emb: DataFrame,
-      idCol: String,
-      vecCol: String,
-      probeFilter: Column,
-      k: Int,
-      maxEmbeddedProbes: Int = 1 << 16,
-      maxChunkedProbes: Int = 1 << 20,
-      maxCollectBytes: Long = 512L << 20,
-      dims: Option[Int] = None): DataFrame =
-    bruteForceTopKFrames(
-      emb.where(probeFilter).select(col(idCol), col(vecCol)), idCol, vecCol,
-      emb, idCol, vecCol, k, maxEmbeddedProbes, maxChunkedProbes,
-      maxCollectBytes, dims = dims)
-
-  /** Exact brute-force top-k, probes and corpus as SEPARATE frames
-    * (the usual real shape: a query set against a corpus). Four
-    * regimes, identical results (spec-pinned):
-    *  - EMBEDDED (probes ≤ `maxEmbeddedProbes`): the probe set — which
-    *    a broadcast join would driver-collect anyway — embeds in a
-    *    single `graft_probe_topk` aggregate; the corpus is scanned
-    *    once with NO join-row materialization (the join formulation
-    *    paid ~1.9 µs/pair of UnsafeRow plumbing around a ~30 ns dot at
-    *    sf10). Exchange carries partitions × probes × k heap entries.
-    *  - CHUNKED (gate < probes ≤ `maxChunkedProbes`): the probe set is
-    *    split into ⌈n/gate⌉ balanced disjoint chunks and each chunk runs
-    *    its own embedded kernel over the corpus, results unioned — the
-    *    per-task heap memory stays gate × k (the reason the gate
-    *    exists) at the price of one extra corpus scan per chunk, and
-    *    STILL zero joined rows. Probes partition across chunks, so the
-    *    union is exactly the single-kernel answer (r14 measurement,
-    *    BENCHNOTES_r14 §: the join's ~µs/pair row plumbing dwarfs the
-    *    re-scan cost by orders of magnitude at over-gate probe counts).
-    *    NOTE when nChunks > 1: each chunk re-runs the corpus frame's
-    *    full lineage — persist a DERIVED corpus (anything that isn't a
-    *    plain parquet scan) before calling, or the upstream compute
-    *    repeats per chunk.
-    *  - ROLE SWAP (probes > `maxChunkedProbes` ≥ corpus): the CORPUS
-    *    embeds instead — ⌈corpus/gate⌉ disjoint candidate chunks, each
-    *    a `graft_corpus_topk` PROJECTION over one probe scan (no
-    *    aggregate, no exchange, no joined rows); with multiple chunks
-    *    the per-chunk arrays re-rank through graft_top_k (chunks are
-    *    disjoint in candidate space, so the merged top-k is exact and
-    *    the exchange carries ≤ probes × k × nChunks rows, never a
-    *    cross product). This retires the join fallback for every case
-    *    where EITHER side fits the collect cap.
-    *  - JOIN (both sides above the cap): split-norm scoring + the
-    *    graft_top_k aggregate over a non-equi join. NOT a peer: the
-    *    `probe_id =!= cand_id` condition plans as CartesianProduct
-    *    once the probe side outgrows broadcast, and the r14 sf10
-    *    measurement killed it outright (2¹⁵ probes × 200k corpus: the
-    *    per-partition right-side spill filled >60 GB of disk and the
-    *    job died at ~17 min, where the chunked kernels finish in
-    *    59 s — BENCHNOTES_r14). The engine therefore FAILS FAST here
-    *    with the scale alternatives (`lshTopKFrames`/`ivfTopKFrames`,
-    *    whose over-gate joins are bucket EQUI-joins) unless the session
-    *    opts in via [[AnnForceJoinKey]]. Passing
-    *    `maxEmbeddedProbes = 0` disables every kernel regime and runs
-    *    the join silently (the spec seam pinning kernel ≡ join).
-    *
-    * Driver-memory bound: the winning side's (id, vector) matrix is
-    * collected under BOTH a row cap (`maxChunkedProbes`) and a BYTE
-    * budget (`maxCollectBytes`, default 512 MB) — dims are sniffed
-    * from one probe row BEFORE anything collects, so the budget bounds
-    * the gate prefix, the full matrix, AND each chunk's embedded plan
-    * literal (see [[decideRegime]]); the regime decision itself
-    * transfers O(effective gate) rows + two bounded counts, never a
-    * full matrix it then discards.
-    *
-    * `includeSelf = true` is the CROSS-CORPUS mode: probe and
-    * candidate ids come from unrelated id spaces, so a numeric id
-    * collision is not a self-pair and must be scored; the default
-    * exclusion serves the single-frame probes ⊆ corpus shape. Output
-    * ids are BIGINT in every regime regardless of input id type.
-    */
-  def bruteForceTopKFrames(
-      probes: DataFrame,
-      probeIdCol: String,
-      probeVecCol: String,
-      corpus: DataFrame,
-      corpusIdCol: String,
-      corpusVecCol: String,
-      k: Int,
-      maxEmbeddedProbes: Int = 1 << 16,
-      maxChunkedProbes: Int = 1 << 20,
-      maxCollectBytes: Long = 512L << 20,
-      includeSelf: Boolean = false,
-      dims: Option[Int] = None): DataFrame = {
-    val spark = corpus.sparkSession
-    val gate = math.max(maxEmbeddedProbes, 0)
-    import org.apache.spark.sql.graftbridge.SparkBridge
-    val dec = decideRegime(probes, probeIdCol, probeVecCol,
-      Some((corpus, corpusIdCol, corpusVecCol)),
-      gate, maxChunkedProbes, maxCollectBytes, knownDims = dims)
-    dec.regime match {
-      case AnnRegime.Probes(collected) =>
-        // null id OR null vector: the join regime silently drops such
-        // probes (a null-valued join/score condition never matches), so
-        // the embedded regime must too, not NPE on getLong
-        val usable = collected.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
-        val cand = Dedup.rebalance(
-          corpus.select(col(corpusIdCol).as("cand_id"), col(corpusVecCol).as("cand_vec")))
-        val chunk = math.max(dec.chunkRows, 1)
-        val nChunks = math.max(1, math.ceil(usable.length.toDouble / chunk).toInt)
-        val frames = (0 until nChunks).map { c =>
-          val lo = (c.toLong * usable.length / nChunks).toInt
-          val hi = ((c + 1).toLong * usable.length / nChunks).toInt
-          val slice = usable.slice(lo, hi)
-          val pIds = slice.map(_.getLong(0))
-          val pVecs = slice.map(_.getSeq[Double](1).toArray)
-          val agg = SparkBridge.column(graft.functions.TopKFunctions.ProbeTopKAgg(
-            SparkBridge.expression(cand("cand_id")),
-            SparkBridge.expression(cand("cand_vec")),
-            pIds, pVecs, k, includeSelf = includeSelf).toAggregateExpression())
-          cand.agg(agg.as("tk"))
-        }
-        frames.reduce(_.union(_))
-          .select(explode(col("tk")).as("e"))
-          .select(col("e.probe_id").as("probe_id"), col("e.rank").as("rank"),
-            col("e.cand_id").as("cand_id"), col("e.sim").as("sim"))
-      case AnnRegime.Corpus(candCollected) =>
-        // ROLE SWAP: embed the corpus, scan the probes
-        val usable = candCollected.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
-        val probeFrame = Dedup.rebalance(
-          probes.select(col(probeIdCol).as("probe_id"), col(probeVecCol).as("probe_vec")))
-        val chunk = math.max(dec.chunkRows, 1)
-        val nChunks = math.max(1, math.ceil(usable.length.toDouble / chunk).toInt)
-        // the kernel sits DIRECTLY inside the generator (never behind
-        // a projected alias): InferFiltersFromGenerate skips non-cheap
-        // generator inputs, but an aliased array gets a `size(tk) > 0`
-        // filter inferred and pushed THROUGH the projection —
-        // duplicating the whole corpus-chunk scoring loop per probe
-        // row (measured: the q72 audit plan ran the kernel twice)
-        def chunkKernel(c: Int): Column = {
-          val lo = (c.toLong * usable.length / nChunks).toInt
-          val hi = ((c + 1).toLong * usable.length / nChunks).toInt
-          val slice = usable.slice(lo, hi)
-          SparkBridge.column(graft.functions.TopKFunctions.CorpusTopK(
-            SparkBridge.expression(probeFrame("probe_id")),
-            SparkBridge.expression(probeFrame("probe_vec")),
-            slice.map(_.getLong(0)), slice.map(_.getSeq[Double](1).toArray), k,
-            includeSelf = includeSelf))
-        }
-        if (nChunks == 1) {
-          // single chunk: the projected array IS the answer; rank =
-          // position (the kernel emits best-first) — zero exchanges
-          probeFrame
-            .select(col("probe_id"), posexplode(chunkKernel(0)).as(Seq("pos", "e")))
-            .select(col("probe_id").cast("long").as("probe_id"),
-              (col("pos") + 1).cast("long").as("rank"),
-              col("e.cand_id").as("cand_id"), col("e.sim").as("sim"))
-        } else {
-          // distributed k-merge: per-chunk winners re-rank through the
-          // bounded graft_top_k aggregate — candidates are already
-          // ROUNDED and chunks are disjoint in candidate space, so the
-          // merged ordering is exactly the single-kernel answer; the
-          // exchange carries ≤ probes × k × nChunks rows
-          val scored = (0 until nChunks).map { c =>
-            probeFrame.select(col("probe_id"), explode(chunkKernel(c)).as("e"))
-              .select(col("probe_id"), col("e.cand_id").as("cand_id"),
-                col("e.sim").as("sim"))
-          }.reduce(_.union(_))
-          rankTopK(scored, k)
-        }
-      case AnnRegime.BothOver =>
-        if (gate > 0) enforceJoinContract(spark, "bruteForceTopK",
-          dec.effectiveCap)
-        val probeSide = probes
-          .select(col(probeIdCol).as("probe_id"), col(probeVecCol).as("probe_vec"))
-          .withColumn("probe_norm", VectorFunctions.norm2(spark, col("probe_vec")))
-        // rebalance: a single-row-group embedding file scans as ONE task,
-        // which would serialize the |probes|×|corpus| cosine loop on one
-        // core; no-op on multi-split tables (Dedup.rebalance)
-        val cand = Dedup.rebalance(
-          corpus.select(col(corpusIdCol).as("cand_id"), col(corpusVecCol).as("cand_vec")))
-          .withColumn("cand_norm", VectorFunctions.norm2(spark, col("cand_vec")))
-        // NO broadcast hint above the embedded gate: the probe count is
-        // known only to exceed the cap and can grow ∝ corpus, so a forced
-        // broadcast is the one driver-OOM shape left at 100× (an 10^8-row
-        // probe filter heads straight for the 8 GB cap). The planner
-        // decides from its stats (AQE can still promote a genuinely small
-        // side at runtime) — the same force-under-threshold /
-        // planner-above pattern as the MoR DV anti-join
-        // (LakeTable.DvBroadcastBytes).
-        val joined =
-          if (includeSelf)
-            // the kernels drop null-id rows; the crossJoin has no join
-            // condition to drop them implicitly (the `=!=` below does),
-            // so filter explicitly or the join regime alone would emit
-            // NULL-id result groups
-            cand.where(col("cand_id").isNotNull)
-              .crossJoin(probeSide.where(col("probe_id").isNotNull))
-          else cand.join(probeSide, col("probe_id") =!= col("cand_id"))
-        val scored = joined
-          .withColumn("sim", splitScore(spark, col("probe_vec"), col("cand_vec"),
-            col("probe_norm"), col("cand_norm")))
-        rankTopK(scored, k)
-    }
-  }
 
   /** Deterministic hyperplane component for plane `p`, dim `d`:
     * md5-derived uniform in [-1, 1). Computed ONCE on the driver —
@@ -520,9 +337,305 @@ object Similarity {
     }.reduce(_ + _)
   }
 
-  /** IVF-style ANN over a single frame: probes are a filtered subset
-    * of `emb` — the convenience form of [[ivfTopKFrames]] (regimes,
-    * quantizer, and salting documented there).
+  /** Top-`n` nearest centroid ids for a vector, as an array column:
+    * sort a tiny struct array of (-dot, id) — map-side only.
+    */
+  private def nearestLists(
+      spark: SparkSession, centroids: Array[Seq[Double]], vec: Column, n: Int): Column = {
+    val scored = array(centroids.zipWithIndex.map { case (c, p) =>
+      struct((-VectorFunctions.dot(spark, vec, typedlit(c))).as("negs"),
+        lit(p).as("id"))
+    }.toSeq: _*)
+    slice(transform(array_sort(scored), s => s.getField("id")), 1, n)
+  }
+
+  /** Driver-side dot over the common prefix (the kernels' rule). */
+  private def dot(a: Array[Double], b: Array[Double]): Double = {
+    val d = math.min(a.length, b.length)
+    var s = 0.0; var i = 0
+    while (i < d) { s += a(i) * b(i); i += 1 }
+    s
+  }
+
+  /** Pipeline part 1: which (probe, candidate) pairs are scored. */
+  private[operators] sealed trait CandidateSource
+  private[operators] object CandidateSource {
+    case object AllPairs extends CandidateSource
+    /** corpus rows sharing the probe's sign-bit signature against
+      * `planes` deterministic hyperplanes
+      */
+    final case class Lsh(planes: Int) extends CandidateSource
+    /** corpus rows whose nearest centroid is among the probe's `nProbe`
+      * nearest (ties to the lower centroid index)
+      */
+    final case class Ivf(centroids: Array[Seq[Double]], nProbe: Int) extends CandidateSource
+  }
+
+  /** Pipeline part 3: what the scored pairs become. */
+  private[operators] sealed trait AnnOutput
+  private[operators] object AnnOutput {
+    /** each probe's `k` best candidates; `includeSelf` also scores
+      * probe_id == cand_id (cross-corpus id spaces, where a numeric
+      * collision is not a self-pair)
+      */
+    final case class TopK(k: Int, includeSelf: Boolean) extends AnnOutput
+    /** every pair with raw cosine above `threshold`, as probe_id <
+      * cand_id; `allPairs` drops that id ordering (distinct frames,
+      * where it would discard about half the true matches)
+      */
+    final case class Pairs(threshold: Double, allPairs: Boolean) extends AnnOutput
+  }
+
+  /** Collected (id, vector) rows as ⌈n/chunkRows⌉ balanced, disjoint
+    * (ids, vectors) chunks. Null-id and null-vector rows are dropped
+    * first: the join regime's null-valued conditions never pair them.
+    */
+  private def chunks(rows: Array[Row], chunkRows: Int): Seq[(Array[Long], Array[Array[Double]])] = {
+    val usable = rows.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+    val n = math.max(1, math.ceil(usable.length.toDouble / math.max(chunkRows, 1)).toInt)
+    (0 until n).map { c =>
+      val slice = usable.slice(
+        (c.toLong * usable.length / n).toInt, ((c + 1).toLong * usable.length / n).toInt)
+      (slice.map(_.getLong(0)), slice.map(_.getSeq[Double](1).toArray))
+    }
+  }
+
+  /** The probe-embedded top-k kernel for one probe chunk. The source's
+    * restriction index is resolved driver-side per chunk: none for all
+    * pairs, `probesBySig` (the chunk's probes by signature) for LSH,
+    * `probesByList` (each probe under its nProbe nearest lists) for
+    * IVF. `width` is the first probe vector's dimension, the plane
+    * width.
+    */
+  private def probeTopK(
+      source: CandidateSource, cId: Expression, cVec: Expression, k: Int,
+      includeSelf: Boolean, width: Int)
+      : (Array[Long], Array[Array[Double]]) => TopKFunctions.ProbeTopKAgg = source match {
+    case CandidateSource.AllPairs =>
+      TopKFunctions.ProbeTopKAgg(cId, cVec, _, _, k, includeSelf = includeSelf)
+    case CandidateSource.Lsh(planes) =>
+      val planeMat = Array.tabulate(planes, width)((p, d) => planeComponent(p, d))
+      def sig(v: Array[Double]): Long =
+        planeMat.indices.foldLeft(0L)((s, p) => if (dot(planeMat(p), v) >= 0) s | 1L << p else s)
+      (ids, vecs) => TopKFunctions.ProbeTopKAgg(cId, cVec, ids, vecs, k,
+        planes = planeMat,
+        probesBySig = vecs.indices.groupBy(pi => sig(vecs(pi)))
+          .map { case (s, idxs) => s -> idxs.toArray },
+        includeSelf = includeSelf)
+    case CandidateSource.Ivf(centroids, nProbe) =>
+      val cents = centroids.map(_.toArray)
+      (ids, vecs) => {
+        val byList = Array.fill(cents.length)(Array.newBuilder[Int])
+        vecs.zipWithIndex.foreach { case (v, pi) =>
+          cents.indices.sortBy(c => (-dot(v, cents(c)), c)).take(nProbe)
+            .foreach(c => byList(c) += pi)
+        }
+        TopKFunctions.ProbeTopKAgg(cId, cVec, ids, vecs, k,
+          centroids = cents, probesByList = byList.map(_.result()),
+          includeSelf = includeSelf)
+      }
+  }
+
+  /** The over-cap join's equi-join key: its column name, its probe-side
+    * and candidate-side expressions over `probe_vec` / `cand_vec`, and
+    * the key count salting sizes against.
+    */
+  private final case class Bucket(name: String, probeKey: Column, candKey: Column, nKeys: Long)
+
+  /** `source`'s join bucket, or None: all pairs is the non-equi join. */
+  private def bucketOf(
+      source: CandidateSource, dec: RegimeDecision,
+      probes: DataFrame, probeVecCol: String,
+      corpus: DataFrame, corpusVecCol: String): Option[Bucket] = source match {
+    case CandidateSource.AllPairs => None
+    case CandidateSource.Lsh(planes) =>
+      // dims: the decision's; the gate=0 seam skipped the sniff (kernels
+      // disabled = zero extra jobs there), so ask the probes, then the
+      // corpus — non-null vectors only, tolerating an all-null / empty
+      // side: 0 dims then, every signature collapses to one bucket, and
+      // null vectors score no rows, which is correct
+      def width(df: DataFrame, vecCol: String): Option[Int] =
+        df.where(col(vecCol).isNotNull).select(size(col(vecCol).cast("array<double>")))
+          .head(1).headOption.map(_.getInt(0))
+      val dims = dec.dims.orElse(width(probes, probeVecCol))
+        .orElse(width(corpus, corpusVecCol)).getOrElse(0)
+      Some(Bucket("sig",
+        lshSignature(probes, col("probe_vec"), planes, dims),
+        lshSignature(corpus, col("cand_vec"), planes, dims),
+        1L << math.min(planes, 62)))
+    case CandidateSource.Ivf(centroids, nProbe) =>
+      val spark = corpus.sparkSession
+      Some(Bucket("list_id",
+        explode(nearestLists(spark, centroids, col("probe_vec"), nProbe)),
+        element_at(nearestLists(spark, centroids, col("cand_vec"), 1), 1),
+        math.max(centroids.length.toLong, 1L)))
+  }
+
+  /** The pipeline behind all eight entry points (object scaladoc):
+    * `source` picks the candidates, [[decideRegime]] the regime, `out`
+    * the kernel and the join tail. Pair output hash-rebalances its
+    * scanned side on the id; top-k rebalances round-robin.
+    */
+  private[operators] def annSearch(
+      source: CandidateSource, out: AnnOutput,
+      probes: DataFrame, probeIdCol: String, probeVecCol: String,
+      corpus: DataFrame, corpusIdCol: String, corpusVecCol: String,
+      maxEmbeddedProbes: Int, maxChunkedProbes: Int, maxCollectBytes: Long,
+      dims: Option[Int]): DataFrame = {
+    require(source == CandidateSource.AllPairs || out.isInstanceOf[AnnOutput.TopK],
+      "threshold pairs score all pairs")
+    val spark = corpus.sparkSession
+    // a single-row-group embedding file scans as ONE task; rebalance
+    // so it does not serialize the scoring loop on one core
+    def scanned(df: DataFrame, idCol: String, vecCol: String, side: String): DataFrame =
+      Dedup.rebalance(df.select(col(idCol).as(s"${side}_id"), col(vecCol).as(s"${side}_vec")),
+        if (out.isInstanceOf[AnnOutput.Pairs]) Seq(col(s"${side}_id")) else Nil)
+    val dec = decideRegime(probes, probeIdCol, probeVecCol,
+      Option.when(source == CandidateSource.AllPairs)((corpus, corpusIdCol, corpusVecCol)),
+      maxEmbeddedProbes, maxChunkedProbes, maxCollectBytes, knownDims = dims)
+    dec.regime match {
+      case AnnRegime.Probes(rows) =>
+        val cand = scanned(corpus, corpusIdCol, corpusVecCol, "cand")
+        val cId = SparkBridge.expression(cand("cand_id"))
+        val cVec = SparkBridge.expression(cand("cand_vec"))
+        val parts = chunks(rows, dec.chunkRows)
+        out match {
+          case AnnOutput.TopK(k, includeSelf) =>
+            val kernel = probeTopK(source, cId, cVec, k, includeSelf,
+              parts.head._2.headOption.fold(0)(_.length))
+            parts.map { case (ids, vecs) =>
+              cand.agg(SparkBridge.column(kernel(ids, vecs).toAggregateExpression()).as("tk"))
+            }.reduce(_.union(_))
+              .select(explode(col("tk")).as("e"))
+              .select(col("e.probe_id").as("probe_id"), col("e.rank").as("rank"),
+                col("e.cand_id").as("cand_id"), col("e.sim").as("sim"))
+          case AnnOutput.Pairs(threshold, allPairs) =>
+            parts.map { case (ids, vecs) =>
+              cand.select(col("cand_id"), explode(SparkBridge.column(TopKFunctions.ProbeMatches(
+                cId, cVec, ids, vecs, threshold, emitAll = allPairs))).as("probe_id"))
+            }.reduce(_.union(_))
+              .select(col("probe_id"), col("cand_id").cast("long").as("cand_id"))
+        }
+      case AnnRegime.Corpus(rows) =>
+        val probe = scanned(probes, probeIdCol, probeVecCol, "probe")
+        val pId = SparkBridge.expression(probe("probe_id"))
+        val pVec = SparkBridge.expression(probe("probe_vec"))
+        val parts = chunks(rows, dec.chunkRows)
+        // each kernel sits DIRECTLY inside its generator, never behind a
+        // projected alias: InferFiltersFromGenerate skips non-cheap
+        // generator inputs, but an aliased array gets a `size(tk) > 0`
+        // filter inferred and pushed THROUGH the projection — duplicating
+        // the whole corpus-chunk scoring loop per probe row (measured:
+        // the q72 audit plan ran the kernel twice)
+        out match {
+          case AnnOutput.TopK(k, includeSelf) =>
+            def kernel(ids: Array[Long], vecs: Array[Array[Double]]): Column =
+              SparkBridge.column(TopKFunctions.CorpusTopK(pId, pVec, ids, vecs, k,
+                includeSelf = includeSelf))
+            // one chunk: the kernel's best-first array IS the answer
+            // (zero exchanges); several: the disjoint chunks' rounded
+            // winners k-merge through graft_top_k, ≤ probes × k × chunks
+            // rows through the exchange
+            if (parts.length == 1) ranked(probe, kernel(parts.head._1, parts.head._2))
+            else rankTopK(parts.map { case (ids, vecs) =>
+              probe.select(col("probe_id"), explode(kernel(ids, vecs)).as("e"))
+                .select(col("probe_id"), col("e.cand_id").as("cand_id"), col("e.sim").as("sim"))
+            }.reduce(_.union(_)), k)
+          case AnnOutput.Pairs(threshold, allPairs) =>
+            // emitGreater: the row is the probe, emitted ids are the
+            // candidates above it — the pair contract from the other
+            // side; disjoint candidate chunks union with no merge
+            parts.map { case (ids, vecs) =>
+              probe.select(col("probe_id"), explode(SparkBridge.column(TopKFunctions.ProbeMatches(
+                pId, pVec, ids, vecs, threshold, emitGreater = true, emitAll = allPairs)))
+                .as("cand_id"))
+            }.reduce(_.union(_))
+              .select(col("probe_id").cast("long").as("probe_id"), col("cand_id"))
+        }
+      case AnnRegime.BothOver =>
+        val bucket = bucketOf(source, dec, probes, probeVecCol, corpus, corpusVecCol)
+        if (bucket.isEmpty && maxEmbeddedProbes > 0) enforceJoinContract(spark,
+          if (out.isInstanceOf[AnnOutput.TopK]) "bruteForceTopK" else "embeddingNearDup",
+          dec.effectiveCap)
+        val probeSel = probes.select(col(probeIdCol).as("probe_id"), col(probeVecCol).as("probe_vec"))
+        val probeSide = bucket.fold(probeSel)(b => probeSel.withColumn(b.name, b.probeKey))
+          .withColumn("probe_norm", VectorFunctions.norm2(spark, col("probe_vec")))
+        val candSel = scanned(corpus, corpusIdCol, corpusVecCol, "cand")
+        val candSide = bucket.fold(candSel)(b => candSel.withColumn(b.name, b.candKey))
+          .withColumn("cand_norm", VectorFunctions.norm2(spark, col("cand_vec")))
+        val pairCond = out match {
+          case AnnOutput.TopK(_, includeSelf) =>
+            Option.when(!includeSelf)(col("probe_id") =!= col("cand_id"))
+          case AnnOutput.Pairs(_, allPairs) =>
+            Option.when(!allPairs)(col("probe_id") < col("cand_id"))
+        }
+        // null ids never pair, as in the kernels: a pair condition drops
+        // them implicitly, so without one they are filtered explicitly
+        val joined = bucket match {
+          case None => pairCond.fold(
+            candSide.where(col("cand_id").isNotNull)
+              .crossJoin(probeSide.where(col("probe_id").isNotNull)))(
+            candSide.join(probeSide, _))
+          case Some(b) =>
+            saltedBucketJoin(candSide, probeSide, b.name, bucketSalt(spark, b.nKeys))
+              .where(pairCond.getOrElse(col("probe_id").isNotNull && col("cand_id").isNotNull))
+        }
+        val cos = splitCosine(spark, col("probe_vec"), col("cand_vec"),
+          col("probe_norm"), col("cand_norm"))
+        out match {
+          case AnnOutput.TopK(k, _) => rankTopK(joined.withColumn("sim", round(cos, 6)), k)
+          case AnnOutput.Pairs(threshold, _) =>
+            joined.where(cos > threshold).select(
+              col("probe_id").cast("long").as("probe_id"), col("cand_id").cast("long").as("cand_id"))
+        }
+    }
+  }
+
+  /** Exact top-k of a probe SUBSET of `emb` against all of `emb`: the
+    * single-frame form of [[bruteForceTopKFrames]]. Probes ⊆ corpus, so
+    * the role swap never fires from here (a probe set too big to
+    * collect implies a corpus too big to collect).
+    */
+  def bruteForceTopK(
+      emb: DataFrame,
+      idCol: String,
+      vecCol: String,
+      probeFilter: Column,
+      k: Int,
+      maxEmbeddedProbes: Int = 1 << 16,
+      maxChunkedProbes: Int = 1 << 20,
+      maxCollectBytes: Long = 512L << 20,
+      dims: Option[Int] = None): DataFrame =
+    bruteForceTopKFrames(
+      emb.where(probeFilter).select(col(idCol), col(vecCol)), idCol, vecCol,
+      emb, idCol, vecCol, k, maxEmbeddedProbes, maxChunkedProbes,
+      maxCollectBytes, dims = dims)
+
+  /** Exact top-k, probes and corpus as SEPARATE frames (a query set
+    * against a corpus): the all-pairs source with all three regimes of
+    * the object scaladoc — probe kernels, role swap, and the fail-fast
+    * non-equi join. Output (probe_id, rank, cand_id, sim), probe_id ≠
+    * cand_id unless `includeSelf` (cross-corpus id spaces).
+    */
+  def bruteForceTopKFrames(
+      probes: DataFrame,
+      probeIdCol: String,
+      probeVecCol: String,
+      corpus: DataFrame,
+      corpusIdCol: String,
+      corpusVecCol: String,
+      k: Int,
+      maxEmbeddedProbes: Int = 1 << 16,
+      maxChunkedProbes: Int = 1 << 20,
+      maxCollectBytes: Long = 512L << 20,
+      includeSelf: Boolean = false,
+      dims: Option[Int] = None): DataFrame =
+    annSearch(CandidateSource.AllPairs, AnnOutput.TopK(k, includeSelf),
+      probes, probeIdCol, probeVecCol, corpus, corpusIdCol, corpusVecCol,
+      maxEmbeddedProbes, maxChunkedProbes, maxCollectBytes, dims)
+
+  /** IVF top-k over a single frame (probes a filtered subset of `emb`):
+    * the single-frame form of [[ivfTopKFrames]].
     */
   def ivfTopK(
       emb: DataFrame,
@@ -542,31 +655,15 @@ object Similarity {
       emb, idCol, vecCol, k, nCentroids, nProbe, trainedCentroids,
       maxEmbeddedProbes, maxChunkedProbes, maxCollectBytes, dims = dims)
 
-  /** IVF-style ANN, probes and corpus as SEPARATE frames (the
-    * cross-corpus decontamination shape — the restricted-index scale
-    * alternative the exact operators' fail-fast message promises): a
-    * deterministic coarse quantizer (the first `nCentroids` CORPUS
-    * vectors by id, or `trainedCentroids` e.g. from
-    * Clustering.kmeansCentroids) partitions the corpus into inverted
-    * lists by nearest centroid; a probe searches only the `nProbe`
-    * lists whose centroids are closest to it. Unlike LSH, list sizes
-    * are data-adaptive; like real IVF, recall is tuned by `nProbe`.
-    *
-    * Regimes (same gates/rationale as [[bruteForceTopKFrames]] — no
-    * role swap: the IVF restriction index is probe-side):
-    *  - EMBEDDED/CHUNKED (probes within the collect caps): probes
-    *    collect bounded, each probe's nProbe nearest lists resolve
-    *    driver-side, and per probe chunk one `graft_probe_topk`
-    *    aggregate scans the corpus with the centroid assignment and
-    *    the per-list probe index INSIDE the kernel — no exploded probe
-    *    frame, no joined rows.
-    *  - JOIN (probes above the caps): the inverted-list bucket
-    *    EQUI-join over the two frames — the legitimate scale path
-    *    (never CartesianProduct), salted when the list count is below
-    *    the shuffle parallelism ([[AnnBucketSaltKey]]).
-    *
-    * `includeSelf = true` scores id collisions in every regime
-    * (cross-corpus id spaces — [[bruteForceTopKFrames]]).
+  /** IVF top-k, probes and corpus as SEPARATE frames: a coarse
+    * quantizer — the first `nCentroids` CORPUS vectors by id, or
+    * `trainedCentroids` (e.g. Clustering.kmeansCentroids) — puts each
+    * corpus row in the inverted list of its nearest centroid, and a
+    * probe searches only its `nProbe` nearest lists. Unlike LSH, list
+    * sizes adapt to the data; recall is tuned by `nProbe`. The
+    * centroids are collected (metadata-scale) before the regime
+    * decision and embed as literals; over the caps the inverted-list
+    * bucket equi-join runs (object scaladoc).
     */
   def ivfTopKFrames(
       probes: DataFrame,
@@ -584,106 +681,17 @@ object Similarity {
       maxCollectBytes: Long = 512L << 20,
       includeSelf: Boolean = false,
       dims: Option[Int] = None): DataFrame = {
-    val spark = corpus.sparkSession
-    // Coarse quantizer: nCentroids vectors collected to the driver
-    // (metadata-scale) and embedded as literals, so list assignment is
-    // a pure map-side expression — no shuffle touches the corpus until
-    // the final per-probe top-k. The default id-prefix seed keeps the
-    // operator self-contained and oracle-replayable.
-    val centroids: Array[Seq[Double]] = trainedCentroids.getOrElse(
+    val centroids = trainedCentroids.getOrElse(
       corpus.orderBy(col(corpusIdCol)).limit(nCentroids)
         .select(col(corpusVecCol).cast("array<double>")).collect()
         .map(_.getSeq[Double](0)))
-
-    val dec = decideRegime(probes, probeIdCol, probeVecCol,
-      None, maxEmbeddedProbes, maxChunkedProbes, maxCollectBytes,
-      knownDims = dims)
-    dec.regime match {
-      case AnnRegime.Probes(collectedProbes) =>
-        import org.apache.spark.sql.graftbridge.SparkBridge
-        val chunk = math.max(dec.chunkRows, 1)
-        val cents: Array[Array[Double]] = centroids.map(_.toArray)
-        def dotD(a: Array[Double], b: Array[Double]): Double = {
-          val d = math.min(a.length, b.length)
-          var s = 0.0; var i = 0
-          while (i < d) { s += a(i) * b(i); i += 1 }
-          s
-        }
-        // drop null-id AND null-vector probes, like the join regime does
-        val usable = collectedProbes.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
-        val cand = Dedup.rebalance(
-          corpus.select(col(corpusIdCol).as("cand_id"), col(corpusVecCol).as("cand_vec")))
-        val nChunks = math.max(1, math.ceil(usable.length.toDouble / chunk).toInt)
-        return (0 until nChunks).map { c =>
-          val lo = (c.toLong * usable.length / nChunks).toInt
-          val hi = ((c + 1).toLong * usable.length / nChunks).toInt
-          val slice = usable.slice(lo, hi)
-          val pIds = slice.map(_.getLong(0))
-          val pVecs = slice.map(_.getSeq[Double](1).toArray)
-          val byList = Array.fill(cents.length)(
-            scala.collection.mutable.ArrayBuffer.empty[Int])
-          pVecs.zipWithIndex.foreach { case (v, pi) =>
-            cents.indices
-              .sortBy(cc => (-dotD(v, cents(cc)), cc)).take(nProbe)
-              .foreach(cc => byList(cc) += pi)
-          }
-          val agg = SparkBridge.column(graft.functions.TopKFunctions.ProbeTopKAgg(
-            SparkBridge.expression(cand("cand_id")),
-            SparkBridge.expression(cand("cand_vec")),
-            pIds, pVecs, k,
-            centroids = cents, probesByList = byList.map(_.toArray),
-            includeSelf = includeSelf)
-            .toAggregateExpression())
-          cand.agg(agg.as("tk"))
-        }.reduce(_.union(_))
-          .select(explode(col("tk")).as("e"))
-          .select(col("e.probe_id").as("probe_id"), col("e.rank").as("rank"),
-            col("e.cand_id").as("cand_id"), col("e.sim").as("sim"))
-      case _ => // over the caps: the bucket EQUI-join below is the
-                // legitimate scale path (never CartesianProduct)
-    }
-
-    /** top-`n` nearest centroid ids for a vector, as an array column:
-      * sort a tiny struct array of (-dot, id) — map-side only.
-      */
-    def nearestLists(vec: Column, n: Int): Column = {
-      val scored = array(centroids.zipWithIndex.map { case (c, p) =>
-        struct((-VectorFunctions.dot(spark, vec, typedlit(c))).as("negs"),
-          lit(p).as("id"))
-      }.toSeq: _*)
-      slice(transform(array_sort(scored), s => s.getField("id")), 1, n)
-    }
-
-    // rebalance before the per-row nCentroids×dims assignment dots —
-    // a single-row-group corpus file must not serialize them
-    val cand = Dedup.rebalance(
-      corpus.select(col(corpusIdCol).as("cand_id"), col(corpusVecCol).as("cand_vec")))
-      .withColumn("list_id", element_at(nearestLists(col("cand_vec"), 1), 1))
-      .withColumn("cand_norm", VectorFunctions.norm2(spark, col("cand_vec")))
-    val probeSide = probes
-      .select(col(probeIdCol).as("probe_id"), col(probeVecCol).as("probe_vec"))
-      .withColumn("list_id", explode(nearestLists(col("probe_vec"), nProbe)))
-      .withColumn("probe_norm", VectorFunctions.norm2(spark, col("probe_vec")))
-    // no broadcast hint above the embedded gate (see bruteForceTopK):
-    // probe counts can grow ∝ corpus; the planner sizes the build side.
-    // Salted: nCentroids list keys alone cap the shuffle parallelism
-    val joined = saltedBucketJoin(cand, probeSide, "list_id",
-      bucketSalt(spark, math.max(nCentroids.toLong, 1L)))
-    val filtered =
-      if (includeSelf)
-        // match the kernels' null-id semantics (the `=!=` below drops
-        // nulls implicitly; includeSelf has no condition that would)
-        joined.where(col("probe_id").isNotNull && col("cand_id").isNotNull)
-      else joined.where(col("probe_id") =!= col("cand_id"))
-    val scored = filtered
-      .withColumn("sim", splitScore(spark, col("probe_vec"), col("cand_vec"),
-        col("probe_norm"), col("cand_norm")))
-    rankTopK(scored, k)
+    annSearch(CandidateSource.Ivf(centroids, nProbe), AnnOutput.TopK(k, includeSelf),
+      probes, probeIdCol, probeVecCol, corpus, corpusIdCol, corpusVecCol,
+      maxEmbeddedProbes, maxChunkedProbes, maxCollectBytes, dims)
   }
 
-  /** ANN via LSH bucketing over a single frame: probes are a filtered
-    * subset of `emb` — the convenience form of [[lshTopKFrames]]
-    * (regimes and salting documented there).
+  /** LSH top-k over a single frame (probes a filtered subset of `emb`):
+    * the single-frame form of [[lshTopKFrames]].
     */
   def lshTopK(
       emb: DataFrame,
@@ -701,40 +709,12 @@ object Similarity {
       emb, idCol, vecCol, k, planes, maxEmbeddedProbes, maxChunkedProbes,
       maxCollectBytes, dims = dims)
 
-  /** ANN via LSH bucketing, probes and corpus as SEPARATE frames (the
-    * cross-corpus decontamination shape): exact rank within the
-    * probe's signature bucket.
-    *
-    * Regime structure (spec-pinned equal; no role swap — the signature
-    * restriction index is probe-side):
-    *  - EMBEDDED (probes ≤ `maxEmbeddedProbes`, byte-shrunk by
-    *    `maxCollectBytes` — [[decideRegime]]): probe signatures
-    *    resolve driver-side against the deterministic hyperplanes and
-    *    one `graft_probe_topk` aggregate scans the corpus with the
-    *    signature hash and the per-bucket probe index INSIDE the
-    *    kernel — the bucket equi-join's semantics with zero joined
-    *    rows, zero signature column, zero shuffle before the k-bounded
-    *    exchange.
-    *  - CHUNKED (gate < probes ≤ the caps): ⌈n/gate⌉ disjoint probe
-    *    chunks, one kernel each with its chunk-local signature index,
-    *    results unioned — probes partition across chunks, so the union
-    *    IS the single-kernel answer, still with zero joined rows.
-    *  - JOIN (above the caps): signature bucket EQUI-join over the two
-    *    frames — the legitimate scale path (never CartesianProduct) —
-    *    WITHOUT a broadcast hint (probe counts can grow ∝ corpus; the
-    *    planner sizes the build side, see bruteForceTopK), and SALTED
-    *    when 2^planes is below the shuffle parallelism
-    *    ([[AnnBucketSaltKey]]: the signature key space would otherwise
-    *    cap the join at 2^planes tasks and hand a dense region's hub
-    *    bucket to one of them).
-    *
-    * The embedding dimension for the join's signature expression is
-    * the one [[decideRegime]] sniffed (no second sizing job); only the
-    * kernels-disabled seam (`maxEmbeddedProbes = 0`) or an all-null
-    * probe side still asks the frames.
-    *
-    * `includeSelf = true` scores id collisions in every regime
-    * (cross-corpus id spaces — [[bruteForceTopKFrames]]).
+  /** LSH top-k, probes and corpus as SEPARATE frames: exact rank within
+    * the probe's random-hyperplane signature bucket (`planes` sign bits
+    * against deterministic hyperplanes; recall < 1 by design). In the
+    * kernel regimes the signature index lives inside the kernel (no
+    * signature column, no joined rows); over the caps the signature
+    * bucket equi-join runs (object scaladoc).
     */
   def lshTopKFrames(
       probes: DataFrame,
@@ -750,93 +730,9 @@ object Similarity {
       maxCollectBytes: Long = 512L << 20,
       includeSelf: Boolean = false,
       dims: Option[Int] = None): DataFrame = {
-    val spark = corpus.sparkSession
     require(planes >= 1 && planes <= 63, s"planes must be in [1, 63], got $planes")
-    val dec = decideRegime(probes, probeIdCol, probeVecCol,
-      None, maxEmbeddedProbes, maxChunkedProbes, maxCollectBytes,
-      knownDims = dims)
-    dec.regime match {
-      case AnnRegime.Probes(collected) =>
-        import org.apache.spark.sql.graftbridge.SparkBridge
-        val chunk = math.max(dec.chunkRows, 1)
-        // null id or vector: dropped, like the bucket join drops them
-        val usable = collected.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
-        val dims = usable.headOption.map(_.getSeq[Double](1).length).getOrElse(0)
-        val planeMat: Array[Array[Double]] =
-          Array.tabulate(planes, dims)((p, d) => planeComponent(p, d))
-        def sigOf(v: Array[Double]): Long = {
-          var sig = 0L
-          var p = 0
-          while (p < planes) {
-            val pl = planeMat(p)
-            val d = math.min(pl.length, v.length)
-            var dot = 0.0
-            var j = 0
-            while (j < d) { dot += pl(j) * v(j); j += 1 }
-            if (dot >= 0) sig |= 1L << p
-            p += 1
-          }
-          sig
-        }
-        val cand = Dedup.rebalance(
-          corpus.select(col(corpusIdCol).as("cand_id"), col(corpusVecCol).as("cand_vec")))
-        val nChunks = math.max(1, math.ceil(usable.length.toDouble / chunk).toInt)
-        (0 until nChunks).map { c =>
-          val lo = (c.toLong * usable.length / nChunks).toInt
-          val hi = ((c + 1).toLong * usable.length / nChunks).toInt
-          val slice = usable.slice(lo, hi)
-          val pIds = slice.map(_.getLong(0))
-          val pVecs = slice.map(_.getSeq[Double](1).toArray)
-          val bySig: Map[Long, Array[Int]] =
-            pVecs.indices.groupBy(pi => sigOf(pVecs(pi)))
-              .map { case (s, idxs) => s -> idxs.toArray }
-          val agg = SparkBridge.column(graft.functions.TopKFunctions.ProbeTopKAgg(
-            SparkBridge.expression(cand("cand_id")),
-            SparkBridge.expression(cand("cand_vec")),
-            pIds, pVecs, k,
-            planes = planeMat, probesBySig = bySig,
-            includeSelf = includeSelf).toAggregateExpression())
-          cand.agg(agg.as("tk"))
-        }.reduce(_.union(_))
-          .select(explode(col("tk")).as("e"))
-          .select(col("e.probe_id").as("probe_id"), col("e.rank").as("rank"),
-            col("e.cand_id").as("cand_id"), col("e.sim").as("sim"))
-      case _ =>
-        // Over the caps (or kernels disabled): the bucket equi-join.
-        // Dims: reuse the decision's sniff; the gate=0 seam skipped it
-        // (kernels disabled = zero extra jobs there), so fall back to
-        // asking the probes, then the corpus — only non-null vectors
-        // (size(null) is null → getInt NPEs), tolerating an all-null /
-        // empty side (head() on empty throws): 0 dims then, and every
-        // signature collapses to one bucket, which is correct (the
-        // per-pair splitScore over null vectors yields no rows).
-        val dims = dec.dims
-          .orElse(probes.where(col(probeVecCol).isNotNull)
-            .select(size(col(probeVecCol).cast("array<double>"))).head(1)
-            .headOption.map(_.getInt(0)))
-          .orElse(corpus.where(col(corpusVecCol).isNotNull)
-            .select(size(col(corpusVecCol).cast("array<double>"))).head(1)
-            .headOption.map(_.getInt(0)))
-          .getOrElse(0)
-        val probeSide = probes
-          .select(col(probeIdCol).as("probe_id"), col(probeVecCol).as("probe_vec"))
-          .withColumn("sig", lshSignature(probes, col("probe_vec"), planes, dims))
-          .withColumn("probe_norm", VectorFunctions.norm2(spark, col("probe_vec")))
-        val cands = Dedup.rebalance(
-          corpus.select(col(corpusIdCol).as("cand_id"), col(corpusVecCol).as("cand_vec")))
-          .withColumn("sig", lshSignature(corpus, col("cand_vec"), planes, dims))
-          .withColumn("cand_norm", VectorFunctions.norm2(spark, col("cand_vec")))
-        val joined = saltedBucketJoin(cands, probeSide, "sig",
-          bucketSalt(spark, 1L << math.min(planes, 62)))
-        val filtered =
-          if (includeSelf)
-            // kernel null-id semantics (see ivfTopKFrames)
-            joined.where(col("probe_id").isNotNull && col("cand_id").isNotNull)
-          else joined.where(col("probe_id") =!= col("cand_id"))
-        val scored = filtered
-          .withColumn("sim", splitScore(spark, col("probe_vec"), col("cand_vec"),
-            col("probe_norm"), col("cand_norm")))
-        rankTopK(scored, k)
-    }
+    annSearch(CandidateSource.Lsh(planes), AnnOutput.TopK(k, includeSelf),
+      probes, probeIdCol, probeVecCol, corpus, corpusIdCol, corpusVecCol,
+      maxEmbeddedProbes, maxChunkedProbes, maxCollectBytes, dims)
   }
 }

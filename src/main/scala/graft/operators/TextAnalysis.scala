@@ -184,8 +184,8 @@ object TextAnalysis {
     // under the 64 MB byte backstop), and tf never shuffles at all;
     // past the gate the planner sizes the shuffle join itself and
     // AQE's skew-join splitting handles hot-word partitions.
-    val maxWords = spark.conf.getOption(TfidfBroadcastWordsKey)
-      .map(_.toInt).getOrElse(TfidfBroadcastWordsDefault)
+    val maxWords = graft.core.GraftConf.int(
+      spark.sessionState.conf, TfidfBroadcastWordsKey, TfidfBroadcastWordsDefault)
     val head = dfr.limit(maxWords + 1).collect()
     // null-safe word equality: the window form groups null words into
     // a partition like any other value, so the join-back must match

@@ -48,7 +48,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
 object PreAggGroupingSets extends Rule[LogicalPlan] {
 
   private def enabled: Boolean =
-    conf.getConfString("spark.graft.preAggGroupingSets", "true").toBoolean
+    graft.core.GraftConf.boolean(conf, "spark.graft.preAggGroupingSets", true)
 
   // Idempotence: our own output is Aggregate-under-Expand, but another
   // rule in the same fixpoint batch (ColumnPruning) may interpose a

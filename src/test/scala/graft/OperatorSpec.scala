@@ -2496,6 +2496,14 @@ class OperatorSpec extends AnyFunSuite {
     val plan = heap.queryExecution.executedPlan.toString
       .split("== Initial Plan ==").head
     assert(!plan.contains("Sort"), plan)
+    // a decimal order value is rejected up front by name, not by the
+    // heap aggregate's type check deep in analysis
+    val ex = intercept[graft.core.UserException] {
+      Ranking.topKPerGroup(df.withColumn("v", $"v".cast("decimal(10,2)")),
+        Seq("g"), orderCol = "v", idCol = "id", k = 3)
+    }
+    assert(ex.getMessage.contains("orderCol v") &&
+      ex.getMessage.contains("decimal(10,2)"), ex.getMessage)
   }
 
   test("topTermsByTfidf: broadcast join-back == over-gate shuffle join == window-dfreq reference") {
@@ -2568,5 +2576,48 @@ class OperatorSpec extends AnyFunSuite {
     val zero = Similarity.decideRegime(probes, "id", "vec",
       Some((corpus, "id", "vec")), 2, 1000, 320L, knownDims = Some(0))
     assert(zero.fetched == sniffed.fetched && zero.dims == sniffed.dims)
+  }
+
+  test("ANN dims hint is checked against the collected vectors: a wrong width is a named error") {
+    val rnd = new scala.util.Random(7)
+    val probes = (1L to 10L).map(i => (i, Array.fill(64)(rnd.nextGaussian())))
+      .toDF("id", "vec")
+    val corpus = (101L to 120L).map(i => (i, Array.fill(64)(rnd.nextGaussian())))
+      .toDF("id", "vec")
+    val ex = intercept[graft.core.UserException] {
+      Similarity.bruteForceTopKFrames(probes, "id", "vec",
+        corpus, "id", "vec", k = 2, dims = Some(8))
+    }
+    assert(ex.getMessage.contains("dims = 8") && ex.getMessage.contains("64-dim"),
+      ex.getMessage)
+    // the correct hint decides and answers exactly as the sniff does
+    val hinted = Similarity.bruteForceTopKFrames(probes, "id", "vec",
+      corpus, "id", "vec", k = 2, dims = Some(64))
+    val sniffed = Similarity.bruteForceTopKFrames(probes, "id", "vec",
+      corpus, "id", "vec", k = 2)
+    assert(hinted.except(sniffed).isEmpty && sniffed.except(hinted).isEmpty)
+  }
+
+  test("malformed spark.graft confs fail with an error naming the key and the value") {
+    val rnd = new scala.util.Random(8)
+    val probes = (1L to 10L).map(i => (i, Array.fill(8)(rnd.nextGaussian())))
+      .toDF("id", "vec")
+    val key = Similarity.AnnBucketSaltKey
+    val saved = spark.conf.getOption(key)
+    try {
+      spark.conf.set(key, "abc")
+      // the bucket join regime (kernels disabled) is where the salt is read
+      val ex = intercept[graft.core.UserException] {
+        Similarity.lshTopKFrames(probes, "id", "vec", probes, "id", "vec",
+          k = 2, planes = 2, maxEmbeddedProbes = 0)
+      }
+      assert(ex.getMessage.contains(key) && ex.getMessage.contains("'abc'"),
+        ex.getMessage)
+    } finally {
+      saved match {
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
+      }
+    }
   }
 }
